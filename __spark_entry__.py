@@ -11,8 +11,11 @@ executors via addPyFile.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 import zipfile
 from collections.abc import Callable
 
@@ -43,7 +46,11 @@ def _ensure_workers(spark: SparkSession) -> None:
     ``spark-submit --py-files`` for a driver that didn't pass it."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
-        zpath = os.path.join("/tmp", "cord19_crawler_spark_pkg.zip")
+        # one zip per process: concurrent drivers must not overwrite each
+        # other's copy while Spark ships it
+        zdir = tempfile.mkdtemp(prefix="cord19_crawler_spark_pkg_")
+        atexit.register(shutil.rmtree, zdir, ignore_errors=True)
+        zpath = os.path.join(zdir, "cord19_crawler_spark_pkg.zip")
         with zipfile.ZipFile(zpath, "w") as zf:
             pkg = os.path.join(REPO, "cord19_crawler_spark")
             for root, _dirs, files in os.walk(pkg):

@@ -773,9 +773,9 @@ class CrawlScheduler:
         )
         batch = politeness.global_batch(ranked, self.cfg.batch_size)
         # cached: reused by the fetch join, crawl_log, and host_state
-        # update. Populated eagerly by the new_urls.count() below (whose
-        # lineage passes through this cache) BEFORE commit_round launches
-        # its concurrent writes — see the note there.
+        # update. Populated eagerly by the per-partition count of new_urls
+        # below (whose lineage passes through this cache) BEFORE
+        # commit_round launches its concurrent writes — see the note there.
         batch = batch.select("url", "url_id", "host", "priority", "attempt", "seq").cache()
 
         # 3. "fetch" through the pluggable seam (default: canonical URL path
@@ -845,13 +845,13 @@ class CrawlScheduler:
         else:
             discovered = self._annotate(canon_links).dropDuplicates(["url"])
 
-        # 5. URL-seen: bloom prefilter → exact backstop. The eager count
-        # populates the new_urls cache AND (through its lineage) the batch
-        # cache + pending persist before commit_round launches the state
-        # writes CONCURRENTLY: concurrent jobs hitting an unpopulated
-        # cached partition on DIFFERENT executors each recompute the full
-        # lineage — with a real HTTP fetcher that would re-fetch the batch
-        # once per write job (a politeness violation, not just waste).
+        # 5. URL-seen: bloom prefilter → exact backstop. The eager
+        # per-partition count populates the new_urls cache AND (through its
+        # lineage) the batch cache + pending persist before commit_round
+        # launches the state writes CONCURRENTLY: concurrent jobs hitting an
+        # unpopulated cached partition on DIFFERENT executors each recompute
+        # the full lineage — with a real HTTP fetcher that would re-fetch the
+        # batch once per write job (a politeness violation, not just waste).
         # persist the probe output: three consumers (the maybe-count below,
         # the broadcast of maybe urls inside the inverted backstop, and the
         # anti-join probe side) would each re-run the Arrow probe stage.
@@ -871,7 +871,13 @@ class CrawlScheduler:
             probe_count=probe_count,
             broadcast_max=int(self.cfg.extra.get("backstop_broadcast_max", 1_000_000)),
         ).cache()
-        new_urls.count()
+        # the cache-filling action; it also gives the per-partition lineage
+        # (north_rule) of the rows url_seen_new will hold, and their sum
+        lineage = {
+            str(r["partition"]): r["count"]
+            for r in new_urls.groupBy("partition").count().collect()
+        }
+        n_new = sum(lineage.values())
 
         # 6. frontier merge is append-only: the round's crawl_log IS the
         #    done-marking (derived pending excludes it); only the newly
@@ -905,20 +911,11 @@ class CrawlScheduler:
         )
 
         def _counters(read) -> dict:
-            """Derived from the WRITTEN tables: row counts are parquet
-            footer metadata; lineage is one tiny agg over the round's
-            url_seen_new delta (per-partition lineage, north_rule)."""
-            log = read("crawl_log")
-            new = read("url_seen_new")
-            lineage = {
-                str(r["partition"]): r["cnt"]
-                for r in new.groupBy("partition")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
+            """Counters the new_urls action above did not give, each a
+            count (one Spark job) over a WRITTEN table."""
             out = {
-                "scheduled": log.count(),
-                "discovered_new": new.count(),
+                "scheduled": read("crawl_log").count(),
+                "discovered_new": n_new,
                 "partition_lineage": lineage,
             }
             if n_fetched is not None:
@@ -1014,7 +1011,7 @@ class CrawlScheduler:
             probe_count=probe_count,
             broadcast_max=int(self.cfg.extra.get("backstop_broadcast_max", 1_000_000)),
         ).cache()
-        new_urls.count()
+        n_new = new_urls.count()
 
         frontier_new = (
             new_urls.withColumn("priority", F.lit(float(priority)))
@@ -1034,13 +1031,6 @@ class CrawlScheduler:
             "round int, seq int, url string, host string, priority double, attempt int",
         )
 
-        def _counters(read) -> dict:
-            return {
-                "scheduled": 0,
-                "discovered_new": read("url_seen_new").count(),
-                "merge_only": True,
-            }
-
         counters = self.store.commit_round(
             rnd,
             {
@@ -1059,7 +1049,7 @@ class CrawlScheduler:
                     else {}
                 ),
             },
-            counters_fn=_counters,
+            counters={"scheduled": 0, "discovered_new": n_new, "merge_only": True},
         )
         new_urls.unpersist()
         flagged.unpersist()

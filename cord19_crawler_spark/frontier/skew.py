@@ -57,11 +57,3 @@ def salted(df: DataFrame, plan: DataFrame, url_col: str = "url") -> DataFrame:
         )
         .drop("n_salt")
     )
-
-
-def repartition_salted(df: DataFrame, plan: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Repartition by the salted composite key (hot hosts split)."""
-    s = salted(df, plan)
-    cols = [F.col("host"), F.col("salt")]
-    out = s.repartition(num_partitions, *cols) if num_partitions else s.repartition(*cols)
-    return out.drop("salt")

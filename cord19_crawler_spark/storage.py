@@ -11,7 +11,9 @@ implements the same contract on plain parquet:
 * the tmp dir is atomically ``os.rename``d to ``<root>/round=<k>/``.
 
 A reader only ever sees fully-committed rounds; a killed run leaves at most
-one ``_tmp_round`` dir that resume ignores and overwrites. This is exactly
+one ``_tmp_round`` dir that resume ignores and overwrites. Reads take each
+table's schema from its part-file footers (``footer_schema``), so opening a
+table runs no Spark job. This is exactly
 the snapshot-commit protocol Iceberg's metadata pointer swap provides; with
 Iceberg available, ``CheckpointStore`` maps 1:1 onto table snapshots.
 
@@ -25,8 +27,79 @@ import json
 import os
 import re
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the DataFrame schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(paths: list[str], merge: bool = False) -> StructType | None:
+    """The schema ``spark.read.parquet(*paths)`` would infer, read from the
+    part-file footers on the driver instead of by a Spark job.
+
+    Mirrors Spark's inference: data files sorted by path, hidden and
+    ``_``-prefixed files skipped; without ``merge`` the first file's schema,
+    with it the union of all files' schemas in first-seen field order.
+    Returns None — the caller lets Spark infer — for anything outside that
+    simple case: a file another writer produced (no Spark schema key), a
+    missing or nested directory, or fields whose types differ between
+    files.
+    """
+    files = []
+    try:
+        for path in paths:
+            for entry in os.scandir(path):
+                if entry.name.startswith(("_", ".")):
+                    continue
+                if not entry.is_file():
+                    return None
+                files.append(entry.path)
+        files.sort()
+        fields: dict = {}
+        for f in files if merge else files[:1]:
+            raw = (pq.read_metadata(f).metadata or {}).get(SPARK_SCHEMA_KEY)
+            if raw is None:
+                return None
+            for field in StructType.fromJson(json.loads(raw)).fields:
+                if fields.setdefault(field.name, field).dataType != field.dataType:
+                    return None
+    except (OSError, ValueError, KeyError, TypeError):
+        # unreadable footer or schema string: Spark's inference reports it
+        return None
+    return StructType(list(fields.values())) if fields else None
+
+
+def read_parquet(
+    spark: SparkSession, paths: list[str], merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet`` with the schema taken from the footers, so
+    opening a table launches no schema-inference job."""
+    schema = footer_schema(paths, merge_schema)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*paths)
+
+
+def write_tables(root: str, tables: dict[str, DataFrame]) -> None:
+    """Write each table to ``<root>/<name>`` as parquet. The tables are
+    independent DataFrames (shared inputs are cached), so their write jobs
+    are submitted concurrently and Spark's scheduler interleaves them across
+    the executor pool. Returns once every write has finished; the first
+    failure is raised, so a caller publishes nothing after a failed write."""
+
+    def _write(item):
+        name, df = item
+        df.write.mode("overwrite").parquet(os.path.join(root, name))
+
+    with ThreadPoolExecutor(max_workers=min(4, len(tables))) as pool:
+        list(pool.map(_write, tables.items()))
 
 
 class CheckpointStore:
@@ -59,8 +132,9 @@ class CheckpointStore:
 
         ``counters_fn(read) -> dict`` runs AFTER the table writes with a
         ``read(name) -> DataFrame`` accessor over the just-written (not yet
-        published) tables — counts come from parquet footers (metadata-only
-        reads) instead of extra pre-write Spark jobs. The accessor signature
+        published) tables. Opening a table reads its schema from the footer,
+        but every count or aggregate on it is a Spark job, so counters the
+        caller already knows belong in ``counters``. The accessor signature
         is store-agnostic: the Iceberg adapter passes a partition-pruned
         table read instead of a tmp-dir path.
         """
@@ -68,24 +142,14 @@ class CheckpointStore:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         os.makedirs(tmp)
-        # the state tables are independent DataFrames (shared inputs are
-        # cached) — submit their write jobs concurrently; Spark's scheduler
-        # interleaves them across the executor pool. Atomicity is unchanged:
-        # nothing is visible until the rename below.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(item):
-            name, df = item
-            df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-
-        with ThreadPoolExecutor(max_workers=min(4, len(tables))) as pool:
-            list(pool.map(_write, tables.items()))
+        # nothing is visible until the rename below
+        write_tables(tmp, tables)
         final_counters = dict(counters or {})
         if counters_fn is not None:
             spark = next(iter(tables.values())).sparkSession
 
             def _read(name: str) -> DataFrame:
-                return spark.read.parquet(os.path.join(tmp, name))
+                return read_parquet(spark, [os.path.join(tmp, name)])
 
             final_counters.update(counters_fn(_read))
         with open(os.path.join(tmp, "_COMMITTED.json"), "w") as f:
@@ -128,8 +192,7 @@ class CheckpointStore:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         os.makedirs(tmp)
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(os.path.join(tmp, name))
+        write_tables(tmp, tables)
         with open(os.path.join(tmp, "_COMMITTED.json"), "w") as f:
             json.dump({"compact_round": rnd}, f)
         final = self._compact_dir(rnd)
@@ -198,7 +261,7 @@ class CheckpointStore:
         return os.path.join(self._round_dir(rnd), name)
 
     def read_table(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
-        return spark.read.parquet(self.table_path(rnd, name))
+        return read_parquet(spark, [self.table_path(rnd, name)])
 
     def read_deltas(
         self,
@@ -211,15 +274,12 @@ class CheckpointStore:
         """Union of a per-round append-only delta table across rounds; the
         Iceberg adapter serves the same call from ONE partition-range scan."""
         paths = [self.table_path(r, name) for r in range(from_rnd, upto_rnd + 1)]
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        return read_parquet(spark, paths, merge_schema)
 
     def read_compact_table(
         self, spark: SparkSession, rnd: int, name: str
     ) -> DataFrame:
-        return spark.read.parquet(self.compact_table_path(rnd, name))
+        return read_parquet(spark, [self.compact_table_path(rnd, name)])
 
     def read_counters(self, rnd: int) -> dict:
         with open(os.path.join(self._round_dir(rnd), "_COMMITTED.json")) as f:

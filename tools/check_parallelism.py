@@ -23,8 +23,10 @@ cpus = int(sys.argv[1]); ckpt = sys.argv[2]
 spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus * 3,
                   extra_conf={"spark.driver.memory": "8g"})
 docs = generate_documents(spark, 2000, partitions=cpus * 4).cache()
+# compact_every=2: rounds 3-5 read through compaction snapshots, so the
+# check also covers the compaction write and read path
 cfg = SchedulerConfig(batch_size=100, seen_partitions=8, bloom_bits=1 << 18,
-                      min_delay_rounds=2, max_in_flight=5)
+                      min_delay_rounds=2, max_in_flight=5, compact_every=2)
 s = CrawlScheduler(spark, docs, ckpt, cfg)
 s.run(5, seeds=seed_urls(spark, 40, 2000))
 out = {"order": s.crawl_order(), "seen": sorted(s.seen_set())}
